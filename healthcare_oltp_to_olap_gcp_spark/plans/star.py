@@ -64,16 +64,22 @@ def prepared_events(events: DataFrame) -> DataFrame:
     )
 
 
-def fact_events(events: DataFrame) -> DataFrame:
-    """Deduplicated fact: newest row per event_id (idempotent wrt.
-    replication overlap), ref sql/bq_fact_vitals.sql:14-17."""
+def _newest_per_event(rows: DataFrame) -> DataFrame:
+    """Newest prepared row per event_id under ``dedup_order`` — the one
+    dedup behind the batch fact, the incremental fact and the streaming
+    fact sink, ref sql/bq_fact_vitals.sql:14-17."""
     w = Window.partitionBy("event_id").orderBy(*dedup_order())
     return (
-        prepared_events(events)
-        .withColumn("_rn", F.row_number().over(w))
+        rows.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def fact_events(events: DataFrame) -> DataFrame:
+    """Deduplicated fact: newest row per event_id (idempotent wrt.
+    replication overlap)."""
+    return _newest_per_event(prepared_events(events))
 
 
 def dim_time(fact: DataFrame) -> DataFrame:
@@ -138,41 +144,42 @@ def dim_source(fact: DataFrame) -> DataFrame:
     )
 
 
+def _join_dims(fact: DataFrame, how: str) -> DataFrame:
+    """fact ⋈ the four dims built from it, each broadcast, joined on the
+    natural keys with join type ``how``.
+
+    The fact is persisted: it feeds four dimension builds plus the
+    join, and Spark reuses no exchanges across those subtrees
+    (measured: 5 scans / 15 window recomputes without the persist).
+    The production shape is refresh_model, which materializes the fact
+    to parquet and reads it back for the dims. ``scoped_persist``
+    releases the previous query's cache so a full registry sweep does
+    not accumulate cached blocks."""
+    fact = scoped_persist(fact)
+    return (
+        fact.join(F.broadcast(dim_user(fact)), "user_id", how)
+        .join(F.broadcast(dim_event_type(fact)), "event_type", how)
+        .join(F.broadcast(dim_band(fact)), "band", how)
+        .join(F.broadcast(dim_source(fact)), F.col("src") == F.col("source"), how)
+    )
+
+
 def fact_events_star(fact: DataFrame) -> DataFrame:
     """Star fact: fact ⋈ all dims on natural keys, keep surrogate keys +
     measure + degenerate event_id, ref sql/bq_fact_vitals_star.sql.
 
     Dims are broadcast — the fact side never shuffles, which is the
     property that matters at 100 TB.
-
-    The fact is persisted: it feeds four dimension builds plus the
-    final join, and Spark reuses no exchanges across those subtrees
-    (measured: 5 scans / 15 window recomputes without the persist).
-    The production shape is refresh_model, which materializes the fact
-    to parquet and reads it back for the dims. ``scoped_persist``
-    releases the previous query's cache so a full registry sweep does
-    not accumulate cached blocks.
     """
-    fact = scoped_persist(fact)
-    du = F.broadcast(dim_user(fact))
-    de = F.broadcast(dim_event_type(fact))
-    db = F.broadcast(dim_band(fact))
-    ds = F.broadcast(dim_source(fact))
-    return (
-        fact.join(du, "user_id")
-        .join(de, "event_type")
-        .join(db, "band")
-        .join(ds, F.col("src") == F.col("source"))
-        .select(
-            "user_key",
-            "event_type_key",
-            "band_key",
-            "source_key",
-            F.to_date("ts").alias("date_key"),
-            "event_id",
-            F.col("value").alias("measure_value"),
-            "ts",
-        )
+    return _join_dims(fact, "inner").select(
+        "user_key",
+        "event_type_key",
+        "band_key",
+        "source_key",
+        F.to_date("ts").alias("date_key"),
+        "event_id",
+        F.col("value").alias("measure_value"),
+        "ts",
     )
 
 
@@ -200,18 +207,7 @@ def sanity_row_counts(fact: DataFrame, star: DataFrame) -> DataFrame:
 def sanity_missing_dims(fact: DataFrame) -> DataFrame:
     """ref README 'No Missing Dimensions' — rows whose natural keys
     fail to resolve in any dimension (should be 0)."""
-    fact = scoped_persist(fact)
-    du = F.broadcast(dim_user(fact))
-    de = F.broadcast(dim_event_type(fact))
-    db = F.broadcast(dim_band(fact))
-    ds = F.broadcast(dim_source(fact))
-    joined = (
-        fact.join(du, "user_id", "left")
-        .join(de, "event_type", "left")
-        .join(db, "band", "left")
-        .join(ds, F.col("src") == F.col("source"), "left")
-    )
-    return joined.filter(
+    return _join_dims(fact, "left").filter(
         F.col("user_key").isNull()
         | F.col("event_type_key").isNull()
         | F.col("band_key").isNull()
@@ -230,12 +226,15 @@ def write_star(star: DataFrame, path: str) -> None:
     - ``sortWithinPartitions(user_key, event_type_key)`` → clustered
       parquet row groups, so min/max row-group stats prune key lookups.
     """
-    (
+    _day_partitioned_writer(star).parquet(path)
+
+
+def _day_partitioned_writer(star: DataFrame):
+    return (
         star.repartition("date_key")
         .sortWithinPartitions("user_key", "event_type_key")
         .write.mode("overwrite")
         .partitionBy("date_key")
-        .parquet(path)
     )
 
 
@@ -247,21 +246,13 @@ def write_star_incremental(star_delta: DataFrame, path: str) -> None:
     100 TB table per cycle is a non-starter; rewriting the 1-2 days the
     delta touches is O(delta)).
 
-    Uses ``partitionOverwriteMode=dynamic`` scoped to this write, so a
-    concurrent full ``write_star`` keeps static-overwrite semantics."""
-    spark = star_delta.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            star_delta.repartition("date_key")
-            .sortWithinPartitions("user_key", "event_type_key")
-            .write.mode("overwrite")
-            .partitionBy("date_key")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    ``partitionOverwriteMode=dynamic`` is a writer option, not a session
+    conf, so other writes on the session keep static-overwrite semantics."""
+    (
+        _day_partitioned_writer(star_delta)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 INCREMENTAL_CUTOFF = "2024-01-24"
@@ -279,13 +270,7 @@ def fact_events_incremental(events: DataFrame, cutoff: str = INCREMENTAL_CUTOFF)
     cut = F.lit(cutoff).cast("timestamp")
     base = fact_events(events.filter(F.col("ts") < cut))
     delta = prepared_events(events.filter(F.col("ts") >= cut))
-    w = Window.partitionBy("event_id").orderBy(*dedup_order())
-    return (
-        base.unionByName(delta)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _newest_per_event(base.unionByName(delta))
 
 
 def write_star_zorder(star: DataFrame, path: str) -> None:

@@ -1,145 +1,63 @@
-"""Pluggable fact-store MERGE sink (VERDICT r3 item 7).
+"""The versioned fact store that streaming/pipeline.incremental_fact_sink
+MERGEs into: parquet snapshots in ``{store_dir}/v={N}`` directories.
 
-The streaming fact maintenance path (streaming/pipeline.
-incremental_fact_sink) and the batch MERGE family emulate transactional
-MERGE over plain parquet, because this environment ships no lakehouse
-jars. This module makes that emulation a STRATEGY rather than a
-hard-coded mechanism: ``FactStore`` is the narrow interface a
-micro-batch MERGE needs — read the live snapshot, merge a delta keeping
-the newest row per key — with two implementations:
+Every merge writes a complete new snapshot ``v=N`` and readers take the
+max version — snapshot isolation over plain parquet, since no table
+format ships here. Versions older than the newest ``RETAIN_VERSIONS``
+are pruned. Each merge rewrites the whole store: fine for the test
+corpus, O(store) per batch at warehouse scale.
 
-* ``VersionedParquetStore`` — the parquet-only form used everywhere in
-  this repo: each merge writes a complete new ``v=N`` snapshot
-  directory and readers take the max version (poor-man's snapshot
-  isolation; old versions pruned past ``RETAIN_VERSIONS``). Correct on
-  any Hadoop filesystem, but every merge rewrites the full store —
-  fine for the test corpus, O(store) per batch at warehouse scale.
-
-* ``DeltaFactStore`` — the same contract on a Delta Lake table via
-  ``DeltaTable.merge`` (guarded import: raises with a clear message
-  when delta-spark isn't on the classpath, as in this container). With
-  a real table format the merge becomes transactional and TOUCHES ONLY
-  THE FILES HOLDING MATCHED KEYS (data-skipping on the join key), so
-  the per-batch cost drops from O(store) to O(delta ∪ matched files) —
-  the property that makes 10-minute-cadence replication viable at
-  100 TB. Iceberg's MERGE INTO commits the same way; an
-  ``IcebergFactStore`` would be this class with SQL MERGE syntax.
-
-What changes at 100 TB with a lakehouse format (SURVEY §4 note):
-snapshot isolation and time travel come from the table log instead of
-``v=N`` directories; concurrent writers are arbitrated by optimistic
-commit instead of being forbidden; compaction/clustering (OPTIMIZE /
-rewrite_data_files) replaces sources/compact.py; and the CDC diff
-(operators/merge.snapshot_diff) can read the table's own change feed
-instead of comparing snapshots. The PLAN SHAPE of every operator in
-this repo is unchanged — only the sink/source commit mechanics move.
+A table format (Delta, Iceberg) would replace the ``v=N`` directories with
+its commit log, and the full rewrite with a MERGE that rewrites only the
+files holding matched event_ids; the plans would not change.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+# Newest version = the live snapshot; one predecessor kept so an
+# in-flight reader of the previous max never loses its files mid-scan.
+RETAIN_VERSIONS = 2
 
 
-class FactStore:
-    """Interface: the two operations a streaming MERGE sink needs."""
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        """Live snapshot, or None when the store doesn't exist yet."""
-        raise NotImplementedError
-
-    def merge(self, delta: DataFrame, key: str, order: tuple[Column, ...],
-              batch_id: int) -> None:
-        """Upsert ``delta``, keeping per ``key`` the first row under
-        ``order`` across store ∪ delta (newest-wins dedup)."""
-        raise NotImplementedError
-
-
-def _dedup(df: DataFrame, key: str, order: tuple[Column, ...]) -> DataFrame:
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def _fs_and_versions(spark: SparkSession, store_dir: str):
+    """List v=N child dirs through the Hadoop FileSystem API, so the
+    store can live on any supported filesystem (local, HDFS, GCS, S3),
+    not just a local path."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(store_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return fs, []
+    versions = []
+    for status in fs.listStatus(path):
+        name = status.getPath().getName()
+        if name.startswith("v="):
+            try:
+                versions.append(int(name.split("=", 1)[1]))
+            except ValueError:
+                continue
+    return fs, versions
 
 
-class VersionedParquetStore(FactStore):
-    """Snapshot-versioned parquet store: the jar-free MERGE emulation.
-
-    Wraps the mechanics that lived inline in streaming/pipeline.py
-    (v=N directories, max-version reads, retention pruning) behind the
-    FactStore contract so the streaming sink is storage-agnostic."""
-
-    def __init__(self, store_dir: str):
-        self.store_dir = store_dir
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        from ..streaming.pipeline import read_fact_store
-
-        return read_fact_store(spark, self.store_dir)
-
-    def merge(self, delta: DataFrame, key: str, order: tuple[Column, ...],
-              batch_id: int) -> None:
-        from ..streaming.pipeline import _prune_versions
-
-        spark = delta.sparkSession
-        current = self.read(spark)
-        merged = delta if current is None else current.unionByName(delta)
-        out = _dedup(merged, key, order)
-        out.write.mode("overwrite").parquet(f"{self.store_dir}/v={batch_id}")
-        _prune_versions(spark, self.store_dir)
+def _prune_versions(spark: SparkSession, store_dir: str, keep: int = RETAIN_VERSIONS) -> None:
+    jvm = spark._jvm
+    fs, versions = _fs_and_versions(spark, store_dir)
+    for v in sorted(versions)[:-keep]:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_dir}/v={v}"), True)
 
 
-class DeltaFactStore(FactStore):
-    """Delta Lake implementation: transactional MERGE, matched-file-only
-    rewrites. Requires delta-spark on the classpath (not present in
-    this container — constructing one without it raises immediately
-    with the reason, per the repo's stub policy)."""
+def read_fact_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
+    """Latest snapshot of the versioned fact store (max version dir), or
+    None when the store does not exist yet."""
+    _, versions = _fs_and_versions(spark, store_dir)
+    if not versions:
+        return None
+    return spark.read.parquet(f"{store_dir}/v={max(versions)}")
 
-    def __init__(self, table_path: str):
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as ex:  # pragma: no cover - environment-dependent
-            raise ImportError(
-                "DeltaFactStore requires the delta-spark package and the "
-                "Delta Lake jars on the Spark classpath; this environment "
-                "ships neither. Use VersionedParquetStore, or install "
-                "delta-spark in a lakehouse deploy."
-            ) from ex
-        self.table_path = table_path
 
-    def read(self, spark: SparkSession) -> DataFrame | None:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        if not DeltaTable.isDeltaTable(spark, self.table_path):
-            return None
-        return spark.read.format("delta").load(self.table_path)
-
-    def merge(self, delta: DataFrame, key: str, order: tuple[Column, ...],
-              batch_id: int) -> None:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        spark = delta.sparkSession
-        # The delta itself may carry replays of one key: pre-dedup it so
-        # the MERGE sees one source row per key (Delta requires it).
-        src = _dedup(delta, key, order)
-        if not DeltaTable.isDeltaTable(spark, self.table_path):
-            src.write.format("delta").save(self.table_path)
-            return
-        t = DeltaTable.forPath(spark, self.table_path)
-        # newest-wins: replace a matched row only when the source row
-        # sorts FIRST under `order` vs the stored one. For the star
-        # fact's (ts DESC, value ASC, props ASC) order this is the
-        # standard "newer ts wins, deterministic tie-break" condition.
-        cond = (
-            "s.ts > t.ts OR (s.ts = t.ts AND (s.value < t.value OR "
-            "(s.value = t.value AND s.props < t.props)))"
-        )
-        (
-            t.alias("t")
-            .merge(src.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedUpdateAll(condition=cond)
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
+def write_fact_store(fact: DataFrame, store_dir: str, version: int) -> None:
+    """Write ``fact`` as snapshot ``version``, then prune old versions."""
+    fact.write.mode("overwrite").parquet(f"{store_dir}/v={version}")
+    _prune_versions(fact.sparkSession, store_dir)

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources.factstore import read_fact_store, write_fact_store
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -330,30 +332,23 @@ def run_available_now(agg: DataFrame, query_name: str = "hourly_agg") -> DataFra
     return _drain_memory_sink(agg, query_name, "complete")
 
 
-def incremental_fact_sink(stream: DataFrame, store_dir: str, store=None):
+def incremental_fact_sink(stream: DataFrame, store_dir: str):
     """Streaming star-fact maintenance (foreachBatch): every micro-batch
-    MERGEs into a fact store, keeping the newest row per event_id — the
-    streaming form of plans/star.fact_events_incremental and the
-    reference's scheduled Dataflow replication job.
+    MERGEs into the versioned fact store (sources/factstore), keeping
+    the newest row per event_id — the streaming form of
+    plans/star.fact_events_incremental and the reference's scheduled
+    Dataflow replication job.
 
-    Storage is pluggable through sources/factstore.FactStore: the
-    default ``VersionedParquetStore`` writes a complete ``v=N`` snapshot
-    per batch and readers take the max version (poor-man's snapshot
-    isolation — all parquet-only storage can offer), pruning versions
-    past ``RETAIN_VERSIONS``; a lakehouse deploy passes
-    ``DeltaFactStore`` (or an Iceberg equivalent) and the same sink
-    becomes a transactional MERGE that rewrites only matched files.
-    The dedup semantics (newest-wins under plans/star.dedup_order) are
-    identical either way — the converges-to-batch tests run through
-    this interface."""
-    from ..plans.star import dedup_order, prepared_events
-    from ..sources.factstore import VersionedParquetStore
-
-    target = store if store is not None else VersionedParquetStore(store_dir)
+    Each micro-batch reads the live snapshot, unions the prepared batch,
+    runs the star's newest-per-event dedup over the union and writes the
+    result as snapshot ``v={batch_id}``."""
+    from ..plans.star import _newest_per_event, prepared_events
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         delta = prepared_events(batch_df)
-        target.merge(delta, "event_id", dedup_order(), batch_id)
+        current = read_fact_store(batch_df.sparkSession, store_dir)
+        rows = delta if current is None else current.unionByName(delta)
+        write_fact_store(_newest_per_event(rows), store_dir, batch_id)
 
     return (
         stream.writeStream.foreachBatch(_merge)
@@ -361,46 +356,6 @@ def incremental_fact_sink(stream: DataFrame, store_dir: str, store=None):
         .trigger(availableNow=True)
         .start()
     )
-
-
-# Newest version = the live snapshot; one predecessor kept so an
-# in-flight reader of the previous max never loses its files mid-scan.
-RETAIN_VERSIONS = 2
-
-
-def _fs_and_versions(spark: SparkSession, store_dir: str):
-    """List v=N child dirs through the Hadoop FileSystem API, so the
-    store can live on any supported filesystem (local, HDFS, GCS, S3),
-    not just a driver-local path."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return fs, []
-    versions = []
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name.startswith("v="):
-            try:
-                versions.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return fs, versions
-
-
-def _prune_versions(spark: SparkSession, store_dir: str, keep: int = RETAIN_VERSIONS) -> None:
-    jvm = spark._jvm
-    fs, versions = _fs_and_versions(spark, store_dir)
-    for v in sorted(versions)[:-keep]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_dir}/v={v}"), True)
-
-
-def read_fact_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """Latest snapshot of the versioned fact store (max version dir)."""
-    _, versions = _fs_and_versions(spark, store_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{store_dir}/v={max(versions)}")
 
 
 def fact_events_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
